@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from aircan_spark import ROW_NUMBER_COLUMN
 from aircan_spark import upsert as upsert_mod
+from aircan_spark.rownum import cache_scope
 
 _MANIFEST = "_MANIFEST.json"
 _BUCKET = "__bucket"
@@ -360,7 +361,6 @@ class BucketedParquetTable:
         a 100 TB table reads and rewrites one bucket, not the table.
         """
         m = self.manifest()
-        held: list[DataFrame] = []  # r13: stage persists, drained post-write
         if m is None:
             # Auto-create (reference D2): empty target with the stage schema.
             target_sub = stage.limit(0)
@@ -370,26 +370,24 @@ class BucketedParquetTable:
             # prunes the scan to the key columns, so this pass is cheap at
             # any scale, and persisting the bucketed stage here was
             # measured SLOWER locally (a second DISK_ONLY fill stacked on
-            # merge's deduped-stage persist). merge() persists the deduped
-            # stage once (r13) — the form every downstream consumer reads.
+            # merge's deduped-stage pin). merge() pins the deduped stage
+            # once — the form every downstream consumer reads.
             stage_b = self._with_bucket(stage)
             affected = sorted(
                 r[_BUCKET] for r in stage_b.select(_BUCKET).distinct().collect()
             )
             target_sub = self.read(buckets=affected)
-        merged = upsert_mod.merge(
-            target_sub,
-            stage,
-            self.keys,
-            preserve_columns=preserve_columns,
-            job_ts=job_ts,
-            insert_start=int(m["max_id"]) + 1,
-            persists=held,
-        )
         v = m["version"] + 1
-        data_dir = self._write_buckets(self._with_bucket(merged), v)
-        for f in held:
-            f.unpersist(blocking=False)
+        with cache_scope():
+            merged = upsert_mod.merge(
+                target_sub,
+                stage,
+                self.keys,
+                preserve_columns=preserve_columns,
+                job_ts=job_ts,
+                insert_start=int(m["max_id"]) + 1,
+            )
+            data_dir = self._write_buckets(self._with_bucket(merged), v)
         buckets = dict(m["buckets"])
         for b in self._present_buckets(data_dir):
             buckets[str(b)] = [f"{data_dir}/{_BUCKET}={b}"]

@@ -107,17 +107,15 @@ def checkpoint(df: DataFrame, big: bool = False, eager: bool = True) -> DataFram
 def release_session_caches(spark, gc_rounds: int = 3, settle_sec: float = 1.0):
     """Release every DataFrame cache entry and drain unreachable blocks.
 
-    Spark's CacheManager holds cached plans by STRONG reference, so a
-    library function that returns a lazy plan over a ``persist()``ed
-    index (minhash/simhash signatures, shingle inverted indexes) pins
-    those bytes for the LIFE OF THE SESSION once the consumer is done —
-    no GC ever frees them (r11 endurance finding: 98.8 MB surviving a
-    full GC drain at 10x; terabytes at 100 TB). Queries that materialize
-    their index during construction release it in-function (the CC
-    family); for the rest, a long-lived session calls THIS between
-    pipelines: clearCache drops the CacheManager pins, then alternating
-    Python/JVM GC passes let the ContextCleaner reap localCheckpoint and
-    RDD blocks whose owners are gone. Returns (n_rdds, bytes) still
+    One rule governs cache pins (``aircan_spark.rownum``): a pin lives
+    until the innermost ``cache_scope()`` open when it was taken exits,
+    or, when no scope was open, until THIS call. Spark's CacheManager
+    holds cached plans by STRONG reference, so no GC ever frees a
+    session pin (r11 endurance finding: 98.8 MB surviving a full GC
+    drain at 10x; terabytes at 100 TB) — a long-lived session calls
+    this between pipelines: clearCache drops the CacheManager pins, then
+    alternating Python/JVM GC passes let the ContextCleaner reap
+    localCheckpoint and RDD blocks whose owners are gone. Returns (n_rdds, bytes) still
     persisted afterwards — anything nonzero is strongly held by LIVE
     references (a real leak or a frame still in use)."""
     import gc

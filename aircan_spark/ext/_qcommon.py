@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from aircan_spark.rownum import with_row_number
+from aircan_spark.rownum import cache_scope, with_row_number
 
 from aircan_spark.data import fan_out
 from aircan_spark.data import load_table as _load

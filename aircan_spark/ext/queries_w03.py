@@ -2156,16 +2156,13 @@ def ext_dedup_groups_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     # df<=64 hot-shingle guard (r10): fixture-inert, oracle-mirrored —
     # see ext_dedup_groups (this query shares its oracle)
-    held: list = []
-    pairs = dedup.ngram_jaccard_pairs(
-        docs, n=3, threshold=0.3, max_doc_freq=dedup.HOT_SHINGLE_MAX_DF,
-        persists=held,
-    )
-    comp = dedup.connected_components_star(pairs)
-    # the star loop checkpointed its edge list eagerly above — the
-    # inverted index is no longer referenced; release the session pin
-    for f in held:
-        f.unpersist()
+    # the star loop checkpoints its edge list eagerly, so the inverted
+    # index is dead once it returns; the scope releases its pin
+    with cache_scope():
+        pairs = dedup.ngram_jaccard_pairs(
+            docs, n=3, threshold=0.3, max_doc_freq=dedup.HOT_SHINGLE_MAX_DF
+        )
+        comp = dedup.connected_components_star(pairs)
     return (
         docs.select("doc_id")
         .join(comp.withColumnRenamed("id", "doc_id"), "doc_id", "left")

@@ -914,16 +914,13 @@ def ext_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     # df<=64 hot-shingle guard (r10): fixture-inert, oracle-mirrored —
     # see ext_dedup_groups
-    held: list = []
-    pairs = dedup.ngram_jaccard_pairs(
-        docs, n=3, threshold=0.3, max_doc_freq=dedup.HOT_SHINGLE_MAX_DF,
-        persists=held,
-    )
-    groups = dedup.dedup_groups(docs, pairs.select("id_a", "id_b"))
-    # CC checkpointed the edges eagerly — release the inverted index's
-    # session pin (r11 endurance finding)
-    for f in held:
-        f.unpersist()
+    # CC checkpoints the edges eagerly — the scope releases the inverted
+    # index's pin (r11 endurance finding)
+    with cache_scope():
+        pairs = dedup.ngram_jaccard_pairs(
+            docs, n=3, threshold=0.3, max_doc_freq=dedup.HOT_SHINGLE_MAX_DF
+        )
+        groups = dedup.dedup_groups(docs, pairs.select("id_a", "id_b"))
     sizes = groups.groupBy("component").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from aircan_spark import ROW_NUMBER_COLUMN, UPDATED_AT_COLUMN
 from aircan_spark.export import export_ordered
-from aircan_spark.rownum import release_caches, with_row_number
+from aircan_spark.rownum import cache_scope, with_row_number
 from aircan_spark.schema import (
     decide_schema_action,
     sanitize_descriptor,
@@ -145,7 +145,8 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
     if method in ("append", "upsert") and table.exists():
         start = table.max_id(rn_col) + 1
 
-    try:
+    # the numbering pin is materialized by the write, then released
+    with cache_scope():
         numbered = with_row_number(typed, column=rn_col, start=start)
 
         # --- write branch (reference 3/4a/4b, :360-460) ---------------------
@@ -162,14 +163,6 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
             table.overwrite(numbered.withColumn(ts_col, F.lit(job_ts)))
         else:
             raise ValueError(f"unknown method: {method!r}")
-    finally:
-        # every with_row_number cache (including those upsert created for
-        # insert numbering) is materialized by the write above — release.
-        release_caches()
-
-    # _updated_at backfill for any legacy NULLs (reference F1, :337-357).
-    if method in ("append", "overwrite"):
-        pass  # stamped inline above — no second rewrite needed
 
     # --- export (reference 5, :483-569) --------------------------------------
     export_path = None

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aircan_spark.data import load_table as _t
-from aircan_spark.rownum import with_row_number
+from aircan_spark.rownum import cache_scope, with_row_number
 from aircan_spark.table import ParquetTable
 
 
@@ -283,7 +283,7 @@ def q15_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merged table. Unchanged-value semantics mean the merged table must
     equal the original — which is what the oracle asserts."""
     orders = _t(spark, sf_dir, "orders")
-    with tempfile.TemporaryDirectory(prefix="aircan_q15_") as wh:
+    with tempfile.TemporaryDirectory(prefix="aircan_q15_") as wh, cache_scope():
         table = ParquetTable(spark, wh, "orders_merge")
         table.overwrite(with_row_number(orders, order_by=["o_orderkey"]))
         stage = orders.filter(F.col("o_orderkey") % 10 == 0)
@@ -352,7 +352,7 @@ def q16_bucketed_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aircan_spark.bucketed import BucketedParquetTable
 
     orders = _t(spark, sf_dir, "orders")
-    with tempfile.TemporaryDirectory(prefix="aircan_q16_") as wh:
+    with tempfile.TemporaryDirectory(prefix="aircan_q16_") as wh, cache_scope():
         table = BucketedParquetTable(spark, wh, "orders_b", keys=["o_orderkey"], num_buckets=16)
         table.overwrite(with_row_number(orders, order_by=["o_orderkey"]))
         stage = orders.filter(F.col("o_orderkey") % 100 == 0).withColumn(

@@ -22,10 +22,23 @@ DataFrame API):
 
 Total cost: one extra pass for the counts (avoidable only by caching), zero
 shuffles of the data itself. Scales to any number of partitions.
+
+This module also owns the package's cache pins. ``pin`` persists a frame
+and records it in the innermost open ``cache_scope()`` of the calling
+thread; the pin lives until that scope exits (normally or by exception).
+With no scope open, the pin lives for the session and
+``aircan_spark.data.release_session_caches`` drains it. Scopes are per
+thread because ``foreachBatch`` runs its callback on py4j's callback
+thread, not on the driver's main thread.
 """
 
 from __future__ import annotations
 
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
+
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -34,27 +47,52 @@ from aircan_spark import ROW_NUMBER_COLUMN
 _PID = "__aircan_pid"
 _LOCAL = "__aircan_local_order"
 
-# Frames persisted by with_row_number(cache=True) that have not been
-# released yet. The numbered result is lazy, so the cache must outlive this
-# function call — callers that materialize the result (pipeline.run, table
-# writes) call release_caches() afterwards; otherwise LRU eviction applies.
-_ACTIVE_CACHES: list[DataFrame] = []
+
+class _Scopes(threading.local):
+    """Per thread: the pin lists of the open cache_scope()s, innermost
+    last."""
+
+    def __init__(self) -> None:
+        self.stack: list[list[DataFrame]] = []
 
 
-def release_caches() -> int:
-    """Unpersist every frame ``with_row_number`` persisted and not yet
-    released. Call after the numbered frame has been materialized (written
-    or collected); returns the number of caches released. Safe to call
-    repeatedly / with nothing outstanding."""
+_SCOPES = _Scopes()
+
+
+def pin(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
+    """Persist ``df`` (at ``level``, else Spark's default) and record it in
+    the innermost open ``cache_scope()`` on this thread, which unpersists
+    it on exit. Outside any scope the pin lasts for the session."""
+    pinned = df.persist() if level is None else df.persist(level)
+    if _SCOPES.stack:
+        _SCOPES.stack[-1].append(pinned)
+    return pinned
+
+
+def release_caches(frames: list[DataFrame]) -> int:
+    """Unpersist ``frames``; returns the number released. A frame whose
+    session has already stopped has nothing left to release."""
     n = 0
-    while _ACTIVE_CACHES:
-        df = _ACTIVE_CACHES.pop()
+    for df in frames:
         try:
             df.unpersist(blocking=False)
             n += 1
         except Exception:  # session already stopped — nothing to release
             pass
     return n
+
+
+@contextmanager
+def cache_scope() -> Iterator[None]:
+    """Unpersist, on exit, exactly the frames ``pin``ned inside this block
+    on this thread (nested scopes release their own pins)."""
+    pins: list[DataFrame] = []
+    _SCOPES.stack.append(pins)
+    try:
+        yield
+    finally:
+        _SCOPES.stack.pop()
+        release_caches(pins)
 
 
 def with_row_number(
@@ -72,7 +110,9 @@ def with_row_number(
     matches the reference's ingest numbering.
 
     ``cache``: the algorithm reads the frame twice (counts, then numbering);
-    caching guarantees the two passes see identical partitioning. Disable
+    pinning guarantees the two passes see identical partitioning. The
+    result is lazy, so the pin must outlive this call: it lives until the
+    caller's ``cache_scope()`` exits (see the module docstring). Disable
     only for deterministic one-pass-cheap sources.
     """
     if order_by:
@@ -86,8 +126,7 @@ def with_row_number(
         local_order = [F.col(_LOCAL)]
 
     if cache:
-        prepared = prepared.persist()
-        _ACTIVE_CACHES.append(prepared)
+        prepared = pin(prepared)
 
     counts = {
         row[_PID]: row["cnt"]
@@ -114,7 +153,4 @@ def with_row_number(
         column, (F.row_number().over(w).cast("long") + offset_expr).cast("long")
     )
     data_cols = [c for c in df.columns if c != column]
-    # The persisted intermediate stays cached so the numbering pass reuses
-    # the exact partitioning the counts were taken from. Callers release it
-    # via release_caches() once the numbered frame materializes.
     return numbered.select(column, *data_cols)

@@ -44,10 +44,6 @@ def get_spark(
         # Timestamps without zone surprises in parquet round-trips.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
-        # Answer bare MIN/MAX/COUNT from parquet footer statistics instead
-        # of scanning data pages (bounds probes, profilers). Spark falls
-        # back to a normal scan whenever the aggregate doesn't qualify.
-        .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

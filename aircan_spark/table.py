@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 
 from aircan_spark import ROW_NUMBER_COLUMN, UPDATED_AT_COLUMN
 from aircan_spark import upsert as upsert_mod
+from aircan_spark.rownum import cache_scope
 
 _VERSION_FILE = "_VERSION"
 
@@ -75,8 +76,9 @@ class ParquetTable:
         # plan, so caching it caches table METADATA only (the catalog
         # analog, same argument as data.load_table's session cache);
         # every execution still reads the parquet bytes. Keyed on
-        # (version, snapshot-dir mtime_ns): a version flip OR an append
-        # into the current snapshot (new file -> dir mtime bump) misses.
+        # (version, snapshot-dir mtime_ns); ``append`` writes into the
+        # current snapshot without a version flip, so it clears the memo
+        # itself rather than trusting the directory mtime to move.
         self._read_cache: dict[tuple, DataFrame] = {}
 
     # ---- snapshot plumbing -------------------------------------------------
@@ -230,6 +232,7 @@ class ParquetTable:
             self.overwrite(df)
             return
         self._align_types(df).write.mode("append").parquet(self.snapshot_dir())
+        self._read_cache.clear()
 
     def create_empty_like(self, df: DataFrame) -> None:
         """Schema-only clone: CREATE TABLE .. AS SELECT .. WHERE 1=0
@@ -255,19 +258,16 @@ class ParquetTable:
         # base captured BEFORE the read: the merge plan scans this exact
         # snapshot, so the commit check detects any version moved since
         base = self.current_version()
-        held: list[DataFrame] = []  # merge's deduped-stage persist (r13)
-        merged = upsert_mod.merge(
-            self.read(),
-            stage,
-            keys,
-            preserve_columns=preserve_columns,
-            job_ts=job_ts,
-            persists=held,
-        )
         v = base + 1
-        merged.write.mode("overwrite").parquet(self.snapshot_dir(v))
-        for f in held:
-            f.unpersist(blocking=False)
+        with cache_scope():
+            merged = upsert_mod.merge(
+                self.read(),
+                stage,
+                keys,
+                preserve_columns=preserve_columns,
+                job_ts=job_ts,
+            )
+            merged.write.mode("overwrite").parquet(self.snapshot_dir(v))
         self._commit(v, expected_base=base)
 
     def backfill_updated_at(

@@ -33,12 +33,13 @@ from __future__ import annotations
 import datetime as dt
 from functools import reduce
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from aircan_spark import ROW_NUMBER_COLUMN, UPDATED_AT_COLUMN
-from aircan_spark.rownum import with_row_number
+from aircan_spark.rownum import pin, with_row_number
 
 _T_PRESENT = "__aircan_t_present"
 _S_PRESENT = "__aircan_s_present"
@@ -99,7 +100,6 @@ def merge(
     preserve_columns: tuple[str, ...] = (),
     job_ts: dt.datetime | None = None,
     insert_start: int | None = None,
-    persists: list | None = None,
 ) -> DataFrame:
     """Compute the merged table as a DataFrame (caller writes it).
 
@@ -108,15 +108,12 @@ def merge(
     table-wide MAX(_id)+1 — the default derives it from ``target``, which
     is only correct when ``target`` is the whole table.
 
-    ``persists`` (r13, guide §5): when given, the DEDUPED stage is
-    persisted (DISK_ONLY — stage size is data-proportional) and appended
-    to the list for the caller to unpersist once the merged frame has
-    been materialized. The deduped stage feeds the update join, the
-    insert anti-join, AND the insert numbering's two passes (range
-    sampling + persist fill), so un-persisted it re-runs the stage scan
-    + dedup window up to four times per merge — at 100 TB that is four
-    full passes over the incoming batch. ``None`` keeps the pre-r13
-    plan byte-identical.
+    The deduplicated stage is ``pin``ned DISK_ONLY (stage size is
+    data-proportional): it feeds the update join, the insert anti-join and
+    the insert numbering's two passes, so unpinned it would re-run the
+    stage scan and dedup window up to four times per merge. The pin, like
+    the insert numbering's, lives until the caller's ``cache_scope()``
+    exits; callers open one around merge and the write of its result.
 
     Column policy (mirrors warehouse.py:222-245):
     - keys: coalesced from both sides.
@@ -136,12 +133,7 @@ def merge(
         raise ValueError(f"unique keys absent from stage: {missing}")
     job_ts = job_ts or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
 
-    stage = dedup_stage(stage, keys)
-    if persists is not None:
-        from pyspark import StorageLevel
-
-        stage = stage.persist(StorageLevel.DISK_ONLY)
-        persists.append(stage)
+    stage = pin(dedup_stage(stage, keys), StorageLevel.DISK_ONLY)
 
     system_cols = {row_number_column, updated_at_column, *preserve_columns}
     stage_data_cols = [c for c in stage.columns if c not in keys and c not in system_cols]

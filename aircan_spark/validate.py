@@ -24,7 +24,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from aircan_spark.rownum import with_row_number
+from aircan_spark.rownum import cache_scope, pin, with_row_number
 from aircan_spark.schema import descriptor_to_struct
 
 ERROR_CAP = 1000  # reference default limit_errors (pipeline_ckan_to_bigquery.py:296)
@@ -87,90 +87,90 @@ def validate(
     """
     if row_limit:
         raw = raw.limit(row_limit)  # reference limit_rows (validation.py:20-27)
-    raw = raw.cache()
-    row_count = raw.count()
+    with cache_scope():
+        raw = pin(raw)
+        row_count = raw.count()
 
-    fields = descriptor.get("fields", [])
-    error_frames: list[DataFrame] = []
+        fields = descriptor.get("fields", [])
+        error_frames: list[DataFrame] = []
 
-    # Per-cell type + required errors in ONE projection pass.
-    cell_errors = []
-    for f in fields:
-        name, ftype = f["name"], f.get("type", "any")
-        if name not in raw.columns:
-            continue
-        constraints = f.get("constraints") or {}
-        col = F.col(name)
-        raw_present = col.isNotNull() & (F.trim(col) != "")
-        casted = _typed_cast(col, ftype, day_first)
-        err = F.when(
-            raw_present & casted.isNull() & F.lit(ftype not in ("string", "any")),
-            F.lit("type-error"),
-        )
-        if constraints.get("required"):
-            err = F.when(~raw_present, F.lit("constraint-error:required")).otherwise(err)
-        cell_errors.append(
-            F.when(
-                err.isNotNull(),
-                F.struct(
-                    F.lit(name).alias("field"),
-                    err.alias("code"),
-                    col.cast("string").alias("value"),
-                ),
-            ).alias(f"__err_{name}")
-        )
-    if cell_errors:
-        # 1-based source row positions (frictionless row numbering), not
-        # opaque monotonically_increasing_id values: partition-offset
-        # numbering over the cached frame preserves source order with no
-        # global window (rownum.py).
-        numbered = with_row_number(raw, column="__row", start=row_start, cache=False)
-        errs = (
-            numbered.select("__row", *cell_errors)
-            .select(
-                "__row",
-                F.explode(
-                    F.filter(
-                        F.array(*[F.col(f"__err_{f['name']}") for f in fields if f["name"] in raw.columns]),
-                        lambda x: x.isNotNull(),
-                    )
-                ).alias("e"),
+        # Per-cell type + required errors in ONE projection pass.
+        cell_errors = []
+        for f in fields:
+            name, ftype = f["name"], f.get("type", "any")
+            if name not in raw.columns:
+                continue
+            constraints = f.get("constraints") or {}
+            col = F.col(name)
+            raw_present = col.isNotNull() & (F.trim(col) != "")
+            casted = _typed_cast(col, ftype, day_first)
+            err = F.when(
+                raw_present & casted.isNull() & F.lit(ftype not in ("string", "any")),
+                F.lit("type-error"),
             )
-            .select(
-                F.col("__row").alias("row"),
-                F.col("e.field").alias("field"),
-                F.col("e.code").alias("code"),
-                F.col("e.value").alias("value"),
+            if constraints.get("required"):
+                err = F.when(~raw_present, F.lit("constraint-error:required")).otherwise(err)
+            cell_errors.append(
+                F.when(
+                    err.isNotNull(),
+                    F.struct(
+                        F.lit(name).alias("field"),
+                        err.alias("code"),
+                        col.cast("string").alias("value"),
+                    ),
+                ).alias(f"__err_{name}")
             )
-        )
-        error_frames.append(errs)
-
-    # unique-constraint violations: keys appearing more than once.
-    for f in fields:
-        constraints = f.get("constraints") or {}
-        if constraints.get("unique") and f["name"] in raw.columns:
-            name = f["name"]
-            dupes = (
-                raw.groupBy(name)
-                .agg(F.count(F.lit(1)).alias("n"))
-                .filter(F.col("n") > 1)
+        if cell_errors:
+            # 1-based source row positions (frictionless row numbering), not
+            # opaque monotonically_increasing_id values: partition-offset
+            # numbering over the cached frame preserves source order with no
+            # global window (rownum.py).
+            numbered = with_row_number(raw, column="__row", start=row_start, cache=False)
+            errs = (
+                numbered.select("__row", *cell_errors)
                 .select(
-                    F.lit(-1).cast("long").alias("row"),
-                    F.lit(name).alias("field"),
-                    F.lit("constraint-error:unique").alias("code"),
-                    F.col(name).cast("string").alias("value"),
+                    "__row",
+                    F.explode(
+                        F.filter(
+                            F.array(*[F.col(f"__err_{f['name']}") for f in fields if f["name"] in raw.columns]),
+                            lambda x: x.isNotNull(),
+                        )
+                    ).alias("e"),
+                )
+                .select(
+                    F.col("__row").alias("row"),
+                    F.col("e.field").alias("field"),
+                    F.col("e.code").alias("code"),
+                    F.col("e.value").alias("value"),
                 )
             )
-            error_frames.append(dupes)
+            error_frames.append(errs)
 
-    if error_frames:
-        all_errors = error_frames[0]
-        for e in error_frames[1:]:
-            all_errors = all_errors.unionByName(e)
-        collected = all_errors.limit(error_cap).collect()
-    else:
-        collected = []
-    raw.unpersist(blocking=False)
+        # unique-constraint violations: keys appearing more than once.
+        for f in fields:
+            constraints = f.get("constraints") or {}
+            if constraints.get("unique") and f["name"] in raw.columns:
+                name = f["name"]
+                dupes = (
+                    raw.groupBy(name)
+                    .agg(F.count(F.lit(1)).alias("n"))
+                    .filter(F.col("n") > 1)
+                    .select(
+                        F.lit(-1).cast("long").alias("row"),
+                        F.lit(name).alias("field"),
+                        F.lit("constraint-error:unique").alias("code"),
+                        F.col(name).cast("string").alias("value"),
+                    )
+                )
+                error_frames.append(dupes)
+
+        if error_frames:
+            all_errors = error_frames[0]
+            for e in error_frames[1:]:
+                all_errors = all_errors.unionByName(e)
+            collected = all_errors.limit(error_cap).collect()
+        else:
+            collected = []
 
     errors = [r.asDict() for r in collected]
     return {

@@ -9,6 +9,7 @@ Covers the reference's golden assertions (FIXTURES.md B9):
 """
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -54,6 +55,22 @@ def test_append_continues_numbering(spark, tmp_path):
     assert got.count() == 4
     assert t.max_id() == 4
     assert got.filter("sku = 40").collect()[0]["_id"] == 4
+
+
+def test_append_invalidates_read_cache_without_mtime_change(spark, tmp_path):
+    """append() clears the read memo itself: an append that leaves the
+    snapshot directory's mtime unchanged (same clock tick, NFS/FUSE
+    mounts) is still visible to the next read()."""
+    t = make_table(spark, tmp_path)
+    t.overwrite(base_df(spark))
+    snap = t.snapshot_dir()
+    before = os.stat(snap)
+    assert t.read().count() == 3  # memoizes the pre-append plan
+    extra = spark.createDataFrame([(40, "delta", 4.0)], ["sku", "name", "price"])
+    extra = with_row_number(extra, start=4, order_by=["sku"])
+    t.append(extra.withColumn("_updated_at", F.lit(TS2)))
+    os.utime(snap, ns=(before.st_atime_ns, before.st_mtime_ns))
+    assert t.read().count() == 4
 
 
 def test_append_schema_evolution(spark, tmp_path):
