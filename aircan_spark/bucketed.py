@@ -38,12 +38,14 @@ import shutil
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aircan_spark import ROW_NUMBER_COLUMN
+from aircan_spark import rownum
 from aircan_spark import upsert as upsert_mod
 from aircan_spark.rownum import cache_scope
 
 _MANIFEST = "_MANIFEST.json"
 _BUCKET = "__bucket"
+# the base a first write commits after: the fields _write_commit reads
+_NO_DATA = {"version": 0, "max_id": 0, "buckets": {}}
 
 
 def bucket_expr(keys: list[str], num_buckets: int) -> Column:
@@ -175,8 +177,8 @@ class BucketedParquetTable:
         key = (int(m["version"]), tuple(paths))
         if key in self._read_cache:
             return self._read_cache[key]
-        # basePath keeps partition discovery from inferring __bucket; each
-        # leaf dir is read directly and the column is not resurrected.
+        # each leaf bucket dir is read directly (no basePath), so partition
+        # discovery never sees __bucket=N and the column is not resurrected
         df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
         if len(self._read_cache) > 8:  # bounded: distinct bucket subsets
             self._read_cache.clear()
@@ -252,78 +254,71 @@ class BucketedParquetTable:
             )
         )
 
-    def max_id(self, column: str = ROW_NUMBER_COLUMN) -> int:
+    def max_id(self) -> int:
+        """The table's last `_id`: manifest metadata, no scan."""
         m = self.manifest()
-        if m is None:
-            return 0
-        if column != ROW_NUMBER_COLUMN:
-            # only the engine `_id` max is manifest metadata; other columns
-            # need a (column-pruned) scan
-            return self._df_max_id_col(self.read(), column)
-        return int(m["max_id"])
+        return int(m["max_id"]) if m else 0
 
     def current_version(self) -> int:
         m = self.manifest()
         return int(m["version"]) if m else 0
 
-    def _df_max_id_col(self, df: DataFrame, column: str) -> int:
-        row = df.agg(F.coalesce(F.max(column), F.lit(0)).alias("m")).collect()[0]
-        return int(row["m"])
-
     # ---- writes ----------------------------------------------------------------
-    def _write_buckets(self, df: DataFrame, version: int) -> str:
-        """Write df (bucket column attached) partitioned by bucket id."""
-        data_dir = f"data_v{version}"
-        (
-            df.repartition(F.col(_BUCKET))
-            .write.mode("overwrite")
-            .partitionBy(_BUCKET)
-            .parquet(os.path.join(self.path, data_dir))
-        )
-        return data_dir
-
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(_BUCKET, bucket_expr(self.keys, self.num_buckets))
 
-    def _present_buckets(self, data_dir: str) -> list[int]:
+    def _write_commit(
+        self,
+        base: dict,
+        df: DataFrame,
+        *,
+        extend: bool = False,
+        schema: str | None = None,
+    ) -> None:
+        """Write ``df`` hash-bucketed into a new data dir and commit the
+        manifest that follows ``base`` (the one this operation read): each
+        bucket the rows landed in points at the new dir — after its
+        existing dirs when ``extend`` (append), instead of them otherwise;
+        other buckets keep ``base``'s pointers. ``max_id`` is the larger of
+        ``base``'s and the MAX(_id) of the files just written (a
+        column-pruned read-back, never a second run of the caller's plan).
+        ``schema`` defaults to ``df``'s."""
+        v = int(base["version"]) + 1
+        data_dir = f"data_v{v}"
         root = os.path.join(self.path, data_dir)
-        return sorted(
+        (
+            self._with_bucket(df)
+            .repartition(F.col(_BUCKET))
+            .write.mode("overwrite")
+            .partitionBy(_BUCKET)
+            .parquet(root)
+        )
+        landed = sorted(
             int(e.split("=", 1)[1])
             for e in os.listdir(root)
             if e.startswith(f"{_BUCKET}=")
         )
-
-    def _df_max_id(self, df: DataFrame) -> int:
-        if ROW_NUMBER_COLUMN not in df.columns:
-            return 0
-        row = df.agg(
-            F.coalesce(F.max(ROW_NUMBER_COLUMN), F.lit(0)).alias("m")
-        ).collect()[0]
-        return int(row["m"])
-
-    def overwrite(self, df: DataFrame) -> None:
-        m = self.manifest()
-        v = (m["version"] + 1) if m else 1
-        data_dir = self._write_buckets(self._with_bucket(df), v)
-        present = self._present_buckets(data_dir)
-        buckets = {str(b): [f"{data_dir}/{_BUCKET}={b}"] for b in present}
-        # max from the files just written (one column-pruned scan), not a
-        # second evaluation of the caller's plan
-        written = (
-            self.spark.read.parquet(os.path.join(self.path, data_dir))
-            if present
-            else None
-        )
+        buckets = dict(base["buckets"])
+        for b in landed:
+            kept = buckets.get(str(b), []) if extend else []
+            buckets[str(b)] = kept + [f"{data_dir}/{_BUCKET}={b}"]
+        # the files' schema is df's: passing it skips a footer-inference job
+        written = self.spark.read.schema(df.schema).parquet(root)
         self._commit(
             {
                 "version": v,
                 "num_buckets": self.num_buckets,
                 "keys": self.keys,
-                "max_id": self._df_max_id(written) if written is not None else 0,
+                "max_id": max(
+                    int(base["max_id"]), rownum.max_id(written) if landed else 0
+                ),
                 "buckets": buckets,
-                "schema": df.schema.json(),
+                "schema": schema or df.schema.json(),
             }
         )
+
+    def overwrite(self, df: DataFrame) -> None:
+        self._write_commit({**_NO_DATA, "version": self.current_version()}, df)
 
     def append(self, df: DataFrame) -> None:
         """Additive: new data dirs appended to each landed bucket's dir
@@ -332,21 +327,7 @@ class BucketedParquetTable:
         if m is None:
             self.overwrite(df)
             return
-        v = m["version"] + 1
-        data_dir = self._write_buckets(self._with_bucket(df), v)
-        buckets = dict(m["buckets"])
-        for b in self._present_buckets(data_dir):
-            buckets[str(b)] = buckets.get(str(b), []) + [f"{data_dir}/{_BUCKET}={b}"]
-        self._commit(
-            {
-                "version": v,
-                "num_buckets": self.num_buckets,
-                "keys": self.keys,
-                "max_id": max(int(m["max_id"]), self._df_max_id(df)),
-                "buckets": buckets,
-                "schema": df.schema.json(),
-            }
-        )
+        self._write_commit(m, df, extend=True)
 
     def upsert(
         self,
@@ -359,12 +340,14 @@ class BucketedParquetTable:
 
         Work ∝ (stage size + size of affected buckets); a 1-row upsert into
         a 100 TB table reads and rewrites one bucket, not the table.
+        Inserts are numbered from the manifest's ``max_id`` + 1; the stage
+        needs no `_id`.
         """
         m = self.manifest()
         if m is None:
             # Auto-create (reference D2): empty target with the stage schema.
             target_sub = stage.limit(0)
-            m = {"version": 0, "max_id": 0, "buckets": {}}
+            m = _NO_DATA
         else:
             # The bucket-set probe stays on the RAW stage: select(_BUCKET)
             # prunes the scan to the key columns, so this pass is cheap at
@@ -377,35 +360,16 @@ class BucketedParquetTable:
                 r[_BUCKET] for r in stage_b.select(_BUCKET).distinct().collect()
             )
             target_sub = self.read(buckets=affected)
-        v = m["version"] + 1
         with cache_scope():
             merged = upsert_mod.merge(
                 target_sub,
                 stage,
                 self.keys,
+                insert_start=int(m["max_id"]) + 1,
                 preserve_columns=preserve_columns,
                 job_ts=job_ts,
-                insert_start=int(m["max_id"]) + 1,
             )
-            data_dir = self._write_buckets(self._with_bucket(merged), v)
-        buckets = dict(m["buckets"])
-        for b in self._present_buckets(data_dir):
-            buckets[str(b)] = [f"{data_dir}/{_BUCKET}={b}"]
-        # read-back max over the rewritten buckets only; untouched buckets
-        # cannot raise the max because inserts always number above it
-        new_max = max(int(m["max_id"]), self._df_max_id(self.spark.read.parquet(
-            os.path.join(self.path, data_dir)
-        )))
-        self._commit(
-            {
-                "version": v,
-                "num_buckets": self.num_buckets,
-                "keys": self.keys,
-                "max_id": new_max,
-                "buckets": buckets,
-                "schema": merged.schema.json(),
-            }
-        )
+            self._write_commit(m, merged)
 
     def delete(self, keys_df: DataFrame) -> int:
         """Targeted key delete (GDPR / right-to-be-forgotten): remove
@@ -433,34 +397,13 @@ class BucketedParquetTable:
         if not affected:
             return 0
         target_sub = self.read(buckets=affected)
-        n_before = target_sub.count()
+        n_deleted = target_sub.join(keys_proj, on=self.keys, how="left_semi").count()
         remaining = target_sub.join(keys_proj, on=self.keys, how="left_anti")
-        v = m["version"] + 1
-        data_dir = self._write_buckets(self._with_bucket(remaining), v)
-        buckets = dict(m["buckets"])
         # affected buckets are wholly replaced by the rewrite — possibly
         # by nothing, when every row of a bucket matched the delete set
-        for b in affected:
-            buckets[str(b)] = []
-        for b in self._present_buckets(data_dir):
-            buckets[str(b)] = [f"{data_dir}/{_BUCKET}={b}"]
-        present = self._present_buckets(data_dir)
-        n_after = (
-            self.spark.read.parquet(os.path.join(self.path, data_dir)).count()
-            if present
-            else 0
-        )
-        self._commit(
-            {
-                "version": v,
-                "num_buckets": self.num_buckets,
-                "keys": self.keys,
-                "max_id": int(m["max_id"]),
-                "buckets": buckets,
-                "schema": m["schema"],
-            }
-        )
-        return n_before - n_after
+        cleared = {**m["buckets"], **{str(b): [] for b in affected}}
+        self._write_commit({**m, "buckets": cleared}, remaining, schema=m["schema"])
+        return n_deleted
 
     def compact(self, min_dirs: int = 2) -> list[int]:
         """Rewrite buckets fragmented across >= ``min_dirs`` data dirs into
@@ -474,22 +417,8 @@ class BucketedParquetTable:
         todo = [b for b, dirs in m["buckets"].items() if len(dirs) >= min_dirs]
         if not todo:
             return []
-        v = m["version"] + 1
         sub = self.read(buckets=[int(b) for b in todo])
-        data_dir = self._write_buckets(self._with_bucket(sub), v)
-        buckets = dict(m["buckets"])
-        for b in self._present_buckets(data_dir):
-            buckets[str(b)] = [f"{data_dir}/{_BUCKET}={b}"]
-        self._commit(
-            {
-                "version": v,
-                "num_buckets": self.num_buckets,
-                "keys": self.keys,
-                "max_id": int(m["max_id"]),
-                "buckets": buckets,
-                "schema": m["schema"],
-            }
-        )
+        self._write_commit(m, sub, schema=m["schema"])
         return [int(b) for b in todo]
 
     def drop(self) -> None:

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import contextlib
 import ctypes
+import threading
 
 import numpy as np
 import pandas as pd
@@ -40,6 +41,11 @@ from aircan_spark.ext.dedup import _cosine
 # shape (threading splits the output matrix; each element's k-dim
 # summation order is unchanged), re-pinned by tests/test_round13_opt.py.
 _BLAS_CONTROLS: list | None = None
+# _single_thread_blas users currently inside, and the thread counts the
+# first of them saved; both guarded by _BLAS_LOCK
+_BLAS_LOCK = threading.Lock()
+_BLAS_USERS = 0
+_BLAS_SAVED: list = []
 
 
 def _blas_thread_controls() -> list:
@@ -83,22 +89,33 @@ def _blas_thread_controls() -> list:
 @contextlib.contextmanager
 def _single_thread_blas():
     """Pin every process BLAS pool to 1 thread for the duration; restore
-    the previous value on exit. No-op when no controllable BLAS is found."""
-    saved = []
-    for getter, setter in _blas_thread_controls():
-        try:
-            saved.append((setter, int(getter())))
-            setter(1)
-        except Exception:
-            continue
+    the previous value on exit. No-op when no controllable BLAS is found.
+
+    Overlapping users (threads entering and leaving in any order) share
+    one pin: the first to enter saves the thread counts, the last to
+    leave restores them, so no interleaving leaves a pool at 1."""
+    global _BLAS_USERS
+    with _BLAS_LOCK:
+        if _BLAS_USERS == 0:
+            _BLAS_SAVED.clear()
+            for getter, setter in _blas_thread_controls():
+                try:
+                    _BLAS_SAVED.append((setter, int(getter())))
+                    setter(1)
+                except Exception:
+                    continue
+        _BLAS_USERS += 1
     try:
         yield
     finally:
-        for setter, n in saved:
-            try:
-                setter(n)
-            except Exception:
-                pass
+        with _BLAS_LOCK:
+            _BLAS_USERS -= 1
+            if _BLAS_USERS == 0:
+                for setter, n in _BLAS_SAVED:
+                    try:
+                        setter(n)
+                    except Exception:
+                        pass
 
 
 def _as_double(df: DataFrame, id_col: str, vec_col: str, out: str) -> DataFrame:

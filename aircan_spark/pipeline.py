@@ -20,11 +20,16 @@ Config keys (names follow the reference's DAG params where they exist):
                         bq_write_method / datastore_append_or_upsert)
     unique_keys         upsert keys; else from descriptor constraints
     validate            bool — row-level validation gate (abort on invalid)
-    row_number_column   default '_id'
-    updated_at_column   default '_updated_at'
     export              optional {'path': dir, 'format': fmt,
                         'single_file': bool}
     day_first           DMY date parsing (legacy Postgres path behavior)
+    num_buckets         bucket the table on the keys (partial-rewrite upsert)
+    on_schema_drift     'evolve' (default) | 'recreate'
+    data_dictionary     type overrides for the schema-drift decision
+    job_ts              load timestamp (default: now, UTC)
+
+The system columns are `_id` and `_updated_at`. The table owns `_id`:
+1..N on overwrite, from its MAX(_id)+1 on append and for upsert inserts.
 """
 
 from __future__ import annotations
@@ -35,7 +40,7 @@ from typing import Any
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from aircan_spark import ROW_NUMBER_COLUMN, UPDATED_AT_COLUMN
+from aircan_spark import UPDATED_AT_COLUMN
 from aircan_spark.export import export_ordered
 from aircan_spark.rownum import cache_scope, with_row_number
 from aircan_spark.schema import (
@@ -65,8 +70,6 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
     """Execute the ingestion lifecycle; returns a result report."""
     path = config["resource_path"]
     method = config.get("method", "overwrite")
-    rn_col = config.get("row_number_column", ROW_NUMBER_COLUMN)
-    ts_col = config.get("updated_at_column", UPDATED_AT_COLUMN)
     job_ts = config.get("job_ts") or dt.datetime.now(dt.timezone.utc).replace(
         tzinfo=None
     )
@@ -140,27 +143,28 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
                 ]
             )
 
-    # --- row numbering (reference 2c/2d: MAX+1 offset, stream inject) ------
-    start = 1
-    if method in ("append", "upsert") and table.exists():
-        start = table.max_id(rn_col) + 1
-
-    # the numbering pin is materialized by the write, then released
+    # --- write branch (reference 3/4a/4b, :360-460) -------------------------
+    # the pins of numbering and merge are materialized by the write, then
+    # released
     with cache_scope():
-        numbered = with_row_number(typed, column=rn_col, start=start)
-
-        # --- write branch (reference 3/4a/4b, :360-460) ---------------------
         if method == "upsert":
+            # the stage is not numbered: the table numbers the inserts
             if not keys:
                 raise ValueError("upsert requires unique_keys (config or descriptor)")
             if num_buckets:
-                table.upsert(numbered, job_ts=job_ts)
+                table.upsert(typed, job_ts=job_ts)
             else:
-                table.upsert(numbered, keys, job_ts=job_ts)
-        elif method == "append":
-            table.append(numbered.withColumn(ts_col, F.lit(job_ts)))
-        elif method == "overwrite":
-            table.overwrite(numbered.withColumn(ts_col, F.lit(job_ts)))
+                table.upsert(typed, keys, job_ts=job_ts)
+        elif method in ("append", "overwrite"):
+            # reference 2c/2d: numbering continues at MAX(_id)+1 on append
+            start = table.max_id() + 1 if method == "append" else 1
+            numbered = with_row_number(typed, start=start).withColumn(
+                UPDATED_AT_COLUMN, F.lit(job_ts)
+            )
+            if method == "append":
+                table.append(numbered)
+            else:
+                table.overwrite(numbered)
         else:
             raise ValueError(f"unknown method: {method!r}")
 
@@ -172,7 +176,6 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
             table.read(),
             exp["path"],
             exp.get("format", config.get("resource_format") or "csv"),
-            order_column=rn_col,
             single_file=exp.get("single_file", False),
         )
 

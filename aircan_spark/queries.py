@@ -287,7 +287,6 @@ def q15_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         table = ParquetTable(spark, wh, "orders_merge")
         table.overwrite(with_row_number(orders, order_by=["o_orderkey"]))
         stage = orders.filter(F.col("o_orderkey") % 10 == 0)
-        stage = with_row_number(stage, order_by=["o_orderkey"])
         table.upsert(stage, ["o_orderkey"])
         merged = table.read()
         result = merged.agg(

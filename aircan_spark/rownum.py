@@ -95,6 +95,16 @@ def cache_scope() -> Iterator[None]:
         release_caches(pins)
 
 
+def max_id(df: DataFrame) -> int:
+    """COALESCE(MAX(_id), 0) over ``df``: the last number handed out, so
+    the next row is numbered from this + 1 (reference A1,
+    warehouse.py:13-31). 0 when ``df`` has no `_id`. Column-pruned scan:
+    only `_id` pages are read."""
+    if ROW_NUMBER_COLUMN not in df.columns:
+        return 0
+    return int(df.agg(F.coalesce(F.max(ROW_NUMBER_COLUMN), F.lit(0))).collect()[0][0])
+
+
 def with_row_number(
     df: DataFrame,
     column: str = ROW_NUMBER_COLUMN,

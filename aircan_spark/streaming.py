@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from aircan_spark import ROW_NUMBER_COLUMN
+from aircan_spark import UPDATED_AT_COLUMN
 from aircan_spark.rownum import cache_scope, with_row_number
 from aircan_spark.table import ParquetTable
 
@@ -53,11 +53,11 @@ def stream_ingest(
 ):
     """Continuously ingest files from ``source_dir`` into ``table``.
 
-    Each micro-batch runs the batch engine's own write path: row numbers
-    continue from MAX(_id)+1 (A1 semantics) and, when ``keys`` are given,
-    the batch MERGEs (J1 semantics) — so a replayed batch after failure
-    converges to the same table state (idempotent upsert + checkpoint
-    offsets = effective exactly-once).
+    Each micro-batch runs the batch engine's own write path: an append
+    numbers rows from MAX(_id)+1 (A1 semantics); with ``keys`` the batch
+    MERGEs (J1 semantics) and the table numbers the inserts — so a
+    replayed batch after failure converges to the same table state
+    (idempotent upsert + checkpoint offsets = effective exactly-once).
 
     Returns the StreamingQuery; caller awaits/stops it.
     """
@@ -76,14 +76,13 @@ def stream_ingest(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        start = table.max_id() + 1
         ts = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         with cache_scope():
-            numbered = with_row_number(batch_df, start=start)
             if keys:
-                table.upsert(numbered, keys, job_ts=ts)
+                table.upsert(batch_df, keys, job_ts=ts)
             else:
-                table.append(numbered.withColumn("_updated_at", F.lit(ts)))
+                numbered = with_row_number(batch_df, start=table.max_id() + 1)
+                table.append(numbered.withColumn(UPDATED_AT_COLUMN, F.lit(ts)))
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)
@@ -670,7 +669,6 @@ def stream_quality_gate(
     gate costs ONE aggregate pass per batch (all checks
     partial-aggregable)."""
     from aircan_spark import profile as _profile
-    from aircan_spark.rownum import with_row_number as _wrn
 
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
@@ -689,9 +687,8 @@ def stream_quality_gate(
                 .parquet(quarantine_dir)
             )
             return
-        start = table.max_id() + 1
         with cache_scope():
-            table.append(_wrn(batch_df, start=start))
+            table.append(with_row_number(batch_df, start=table.max_id() + 1))
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

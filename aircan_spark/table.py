@@ -49,7 +49,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aircan_spark import ROW_NUMBER_COLUMN, UPDATED_AT_COLUMN
+from aircan_spark import UPDATED_AT_COLUMN, rownum
 from aircan_spark import upsert as upsert_mod
 from aircan_spark.rownum import cache_scope
 
@@ -172,13 +172,9 @@ class ParquetTable:
     def columns(self) -> list[str]:
         return self.read().columns
 
-    def max_id(self, column: str = ROW_NUMBER_COLUMN) -> int:
-        """COALESCE(MAX(_id), 0) — next-row-number start (reference A1,
-        warehouse.py:13-31). Column-pruned scan: only `_id` pages read."""
-        if not self.exists():
-            return 0
-        row = self.read().agg(F.coalesce(F.max(column), F.lit(0)).alias("m")).collect()[0]
-        return int(row["m"])
+    def max_id(self) -> int:
+        """The table's last `_id` (``rownum.max_id``); 0 when absent."""
+        return rownum.max_id(self.read()) if self.exists() else 0
 
     # ---- writes ----------------------------------------------------------------
     def overwrite(self, df: DataFrame) -> None:
@@ -250,7 +246,8 @@ class ParquetTable:
     ) -> None:
         """MERGE the stage into this table (reference J1 flow,
         warehouse.py:430-491): auto-create from stage schema when absent,
-        dedup + join-merge, rewrite as a new snapshot."""
+        dedup + join-merge, rewrite as a new snapshot. Inserts are numbered
+        from this table's MAX(_id)+1; the stage needs no `_id`."""
         if not self.exists():
             self.create_empty_like(stage)
         else:
@@ -264,6 +261,7 @@ class ParquetTable:
                 self.read(),
                 stage,
                 keys,
+                insert_start=self.max_id() + 1,
                 preserve_columns=preserve_columns,
                 job_ts=job_ts,
             )

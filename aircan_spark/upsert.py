@@ -15,8 +15,8 @@ full-outer join + projection + table rewrite — the same physical work Delta's
 MERGE does on unpartitioned parquet):
 
 1. dedup the stage on its keys. ANY_VALUE is nondeterministic in BigQuery;
-   we deliberately pick FIRST-BY-`_id` (documented deviation, SURVEY §7.4.2)
-   so reruns are idempotent.
+   we deliberately pick the first row in source order (documented
+   deviation, SURVEY §7.4.2) so reruns are idempotent.
 2. full-outer join target vs stage on the keys (null keys never match,
    matching SQL MERGE ON semantics). AQE picks broadcast vs sort-merge;
    skew-join splitting handles hot keys.
@@ -24,8 +24,10 @@ MERGE does on unpartitioned parquet):
    ``IS DISTINCT FROM`` (warehouse.py:236-239).
 4. matched rows keep target `_id`; updates touch `_updated_at` ONLY when a
    data column actually changed (warehouse.py:272-276).
-5. inserts get contiguous `_id` continuing at MAX(target._id)+1 via the
-   partition-offset numbering (rownum.py) — never a global window.
+5. inserts get contiguous `_id` from the caller's ``insert_start`` (the
+   table's MAX(_id)+1, which the table knows) via the partition-offset
+   numbering (rownum.py) — never a global window. The stage's own `_id`,
+   if any, is dropped, so stages need not be numbered.
 """
 
 from __future__ import annotations
@@ -55,7 +57,9 @@ def dedup_stage(
 
     Rows are ranked within each key by ``order_column`` (the stage `_id`
     when present — i.e. source-file order) and the first kept. Falls back
-    to an arbitrary-but-stable ``monotonically_increasing_id`` order.
+    to ``monotonically_increasing_id`` order (partition index, then
+    position within it), which is file order for file sources — the
+    order the stage `_id` would have had.
     """
     if order_column is None:
         order_column = (
@@ -95,18 +99,16 @@ def merge(
     stage: DataFrame,
     keys: list[str],
     *,
-    row_number_column: str = ROW_NUMBER_COLUMN,
-    updated_at_column: str = UPDATED_AT_COLUMN,
+    insert_start: int,
     preserve_columns: tuple[str, ...] = (),
     job_ts: dt.datetime | None = None,
-    insert_start: int | None = None,
 ) -> DataFrame:
     """Compute the merged table as a DataFrame (caller writes it).
 
-    ``insert_start``: explicit first `_id` for inserted rows. Callers that
-    merge a SUBSET of the table (bucketed partial rewrite) must pass the
-    table-wide MAX(_id)+1 — the default derives it from ``target``, which
-    is only correct when ``target`` is the whole table.
+    ``insert_start``: the first `_id` for inserted rows — the table-wide
+    MAX(_id)+1, which the caller owns (``ParquetTable.max_id`` or the
+    bucketed manifest's ``max_id``); ``target`` may be only a subset of
+    the table (bucketed partial rewrite), so merge never derives it.
 
     The deduplicated stage is ``pin``ned DISK_ONLY (stage size is
     data-proportional): it feeds the update join, the insert anti-join and
@@ -117,12 +119,12 @@ def merge(
 
     Column policy (mirrors warehouse.py:222-245):
     - keys: coalesced from both sides.
-    - ``row_number_column`` + ``preserve_columns``: kept from target on
-      match; inserts get fresh contiguous numbers.
+    - `_id` + ``preserve_columns``: kept from target on match; inserts
+      get fresh contiguous numbers from ``insert_start``.
     - other stage columns: stage value when matched-and-changed or insert,
       else target value.
     - target-only columns (schema evolution): kept, NULL for inserts.
-    - ``updated_at_column``: job timestamp on insert and on changed update;
+    - `_updated_at`: job timestamp on insert and on changed update;
       untouched otherwise.
     """
     if not keys:
@@ -135,7 +137,7 @@ def merge(
 
     stage = pin(dedup_stage(stage, keys), StorageLevel.DISK_ONLY)
 
-    system_cols = {row_number_column, updated_at_column, *preserve_columns}
+    system_cols = {ROW_NUMBER_COLUMN, UPDATED_AT_COLUMN, *preserve_columns}
     stage_data_cols = [c for c in stage.columns if c not in keys and c not in system_cols]
     target_only_cols = [
         c for c in target.columns
@@ -164,11 +166,11 @@ def merge(
 
     projections: list[Column] = []
     # Row-number column first (reference: first column of every table).
-    if row_number_column in target.columns:
-        existing_id = F.col(f"T.{row_number_column}").cast("long")
+    if ROW_NUMBER_COLUMN in target.columns:
+        existing_id = F.col(f"T.{ROW_NUMBER_COLUMN}").cast("long")
     else:
         existing_id = F.lit(None).cast("long")
-    projections.append(existing_id.alias(row_number_column))
+    projections.append(existing_id.alias(ROW_NUMBER_COLUMN))
     for k in keys:
         projections.append(F.col(f"T.{k}").alias(k))
     for c in stage_data_cols:
@@ -187,18 +189,18 @@ def merge(
     for c in preserve_columns:
         if c in target.columns:
             projections.append(F.col(f"T.{c}").alias(c))
-    if updated_at_column in target.columns:
-        old_ts = F.col(f"T.{updated_at_column}")
+    if UPDATED_AT_COLUMN in target.columns:
+        old_ts = F.col(f"T.{UPDATED_AT_COLUMN}")
     else:
         old_ts = F.lit(None).cast("timestamp")
     projections.append(
-        F.when(changed, F.lit(job_ts)).otherwise(old_ts).alias(updated_at_column)
+        F.when(changed, F.lit(job_ts)).otherwise(old_ts).alias(UPDATED_AT_COLUMN)
     )
     existing = joined.select(*projections)
 
     # Inserts: stage keys absent from the target. The probe side is the
     # target's KEY COLUMNS only (column-pruned scan).
-    inserts_src = stage.drop(_S_PRESENT, row_number_column, updated_at_column).alias("S")
+    inserts_src = stage.drop(_S_PRESENT, ROW_NUMBER_COLUMN, UPDATED_AT_COLUMN).alias("S")
     anti = inserts_src.join(target.select(*keys).alias("T"), cond, "left_anti")
     insert_cols: list[Column] = []
     for k in keys:
@@ -217,28 +219,16 @@ def merge(
                 insert_cols.append(F.col(c).cast(target_types[c]).alias(c))
             else:
                 insert_cols.append(F.lit(None).cast(target_types[c]).alias(c))
-    insert_cols.append(F.lit(job_ts).alias(updated_at_column))
+    insert_cols.append(F.lit(job_ts).alias(UPDATED_AT_COLUMN))
     inserts = anti.select(*insert_cols)
 
-    # Number the inserts: MAX(existing _id) + 1.. in key order, via the
+    # Number the inserts from insert_start in key order, via the
     # partition-offset numbering (rownum.py) — never a single-task global
     # window over the merged table.
-    if insert_start is None:
-        if row_number_column in target.columns:
-            max_id = target.agg(
-                F.coalesce(F.max(row_number_column), F.lit(0)).alias("m")
-            ).collect()[0]["m"]
-            insert_start = int(max_id) + 1
-        else:
-            insert_start = 1
-    if row_number_column not in target.columns:
+    if ROW_NUMBER_COLUMN not in target.columns:
         # Bootstrap: target has no numbering to preserve — number the whole
         # merged result contiguously in key order.
-        all_rows = existing.drop(row_number_column).unionByName(inserts)
-        return with_row_number(
-            all_rows, column=row_number_column, start=insert_start, order_by=keys
-        )
-    numbered_inserts = with_row_number(
-        inserts, column=row_number_column, start=insert_start, order_by=keys
-    )
+        all_rows = existing.drop(ROW_NUMBER_COLUMN).unionByName(inserts)
+        return with_row_number(all_rows, start=insert_start, order_by=keys)
+    numbered_inserts = with_row_number(inserts, start=insert_start, order_by=keys)
     return existing.unionByName(numbered_inserts)

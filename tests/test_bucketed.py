@@ -56,6 +56,31 @@ def test_roundtrip_overwrite_read(spark, tmp_path):
     assert t.max_id() == 100
 
 
+def test_append_evaluates_callers_plan_once(spark, tmp_path):
+    """append takes the new max_id from the files it wrote, not from a
+    second run of the caller's plan: a counting UDF sees each row once."""
+    t = BucketedParquetTable(spark, str(tmp_path), "t", keys=["k"], num_buckets=4)
+    t.overwrite(base_df(spark, n=10))
+    evaluated = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def counted(v):
+        evaluated.add(1)
+        return v
+
+    extra = spark.range(11, 21).select(
+        counted(F.col("id")).alias(ROW_NUMBER_COLUMN),
+        F.col("id").alias("k"),
+        (F.col("id") * 10).alias("val"),
+        F.concat(F.lit("name_"), F.col("id")).alias("name"),
+        F.lit(TS1).alias(UPDATED_AT_COLUMN),
+    )
+    t.append(extra)
+    assert evaluated.value == 10
+    assert t.max_id() == 20
+    assert t.read().count() == 20
+
+
 def test_upsert_matches_full_rewrite_table(spark, tmp_path):
     bt = BucketedParquetTable(spark, str(tmp_path / "b"), "t", keys=["k"], num_buckets=8)
     ft = ParquetTable(spark, str(tmp_path / "f"), "t")

@@ -2,10 +2,16 @@
 
 import datetime as dt
 import json
+import os
+from pathlib import Path
 
 import pytest
 
+from aircan_spark import pipeline as pipeline_mod
+from aircan_spark import upsert as upsert_mod
+from aircan_spark.bucketed import BucketedParquetTable
 from aircan_spark.pipeline import ValidationFailure, run
+from aircan_spark.table import ParquetTable
 
 DESCRIPTOR = {
     "fields": [
@@ -24,6 +30,16 @@ def write_csv(path, rows):
         fh.write("sku,name,price\n")
         for r in rows:
             fh.write(",".join(str(x) if x is not None else "" for x in r) + "\n")
+
+
+def table_rows(spark, path, num_buckets=None):
+    """The rows of the table at ``path``, in `_id` order."""
+    wh, name = os.path.split(path)
+    if num_buckets:
+        table = BucketedParquetTable(spark, wh, name, keys=["sku"], num_buckets=num_buckets)
+    else:
+        table = ParquetTable(spark, wh, name)
+    return sorted(table.read().collect(), key=lambda r: r["_id"])
 
 
 def test_overwrite_append_upsert_export_cycle(spark, tmp_path):
@@ -112,6 +128,64 @@ def test_pipeline_bucketed_cycle(spark, tmp_path):
     assert int(data[31][0]) == 31                              # MAX+1 insert
 
 
+@pytest.mark.parametrize("num_buckets", [None, 4])
+def test_pipeline_upsert_creates_table_in_key_order(spark, tmp_path, num_buckets):
+    """An upsert into a table that does not exist yet numbers the rows
+    1..N in key order and keeps the first-in-file row of a duplicated key."""
+    src = str(tmp_path / "s.csv")
+    write_csv(src, [(3, "c", 3.0), (1, "first", 1.0), (2, "b", 2.0), (1, "second", 9.0)])
+    cfg = {
+        "resource_path": src,
+        "table_name": "fresh",
+        "warehouse": str(tmp_path / "wh"),
+        "schema_descriptor": DESCRIPTOR,
+        "method": "upsert",
+        "job_ts": TS1,
+    }
+    if num_buckets:
+        cfg["num_buckets"] = num_buckets
+    res = run(spark, cfg)
+    assert res["rows"] == 3
+    rows = table_rows(spark, res["table"], num_buckets)
+    assert [(r["_id"], r["sku"], r["name"]) for r in rows] == [
+        (1, 1, "first"), (2, 2, "b"), (3, 3, "c")
+    ]
+
+
+def test_pipeline_upsert_numbers_only_the_inserts(spark, tmp_path, monkeypatch):
+    """A flat pipeline upsert runs the row numbering once, for the inserts:
+    the stage itself is not numbered."""
+    src1 = str(tmp_path / "v1.csv")
+    write_csv(src1, [(1, "a", 1.0), (2, "b", 2.0)])
+    cfg = {
+        "resource_path": src1,
+        "table_name": "t",
+        "warehouse": str(tmp_path / "wh"),
+        "schema_descriptor": DESCRIPTOR,
+        "method": "overwrite",
+        "job_ts": TS1,
+    }
+    run(spark, cfg)
+    calls = []
+
+    def counting(orig):
+        def wrapper(*args, **kwargs):
+            calls.append(args[0])
+            return orig(*args, **kwargs)
+        return wrapper
+
+    for mod in (pipeline_mod, upsert_mod):
+        monkeypatch.setattr(mod, "with_row_number", counting(mod.with_row_number))
+    src2 = str(tmp_path / "v2.csv")
+    write_csv(src2, [(2, "b2", 2.0), (3, "c", 3.0)])
+    res = run(spark, {**cfg, "resource_path": src2, "method": "upsert", "job_ts": TS2})
+    assert len(calls) == 1
+    rows = table_rows(spark, res["table"])
+    assert [(r["_id"], r["sku"], r["name"]) for r in rows] == [
+        (1, 1, "a"), (2, 2, "b2"), (3, 3, "c")
+    ]
+
+
 def test_pipeline_validation_abort(spark, tmp_path):
     src = str(tmp_path / "bad.csv")
     with open(src, "w") as fh:
@@ -192,12 +266,10 @@ def test_pipeline_releases_rownum_caches(spark, tmp_path):
     assert after <= before
 
 
-def test_dag_task_body_runs_pipeline(spark, tmp_path):
+def test_dag_task_body_runs_pipeline(spark, tmp_path, monkeypatch):
     """dags/ingest_dag.run_ingest — the single Airflow task body — executes
     the lifecycle and emits status callbacks (C1/C4 wiring)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/dags")
+    monkeypatch.syspath_prepend(str(Path(__file__).resolve().parents[1] / "dags"))
     import ingest_dag
 
     src = str(tmp_path / "r.csv")

@@ -56,6 +56,22 @@ def test_single_thread_blas_sets_and_restores():
     assert int(getter()) == before
 
 
+def test_single_thread_blas_interleaved_users_restore(monkeypatch):
+    """Overlapping users share one pin: enter A, enter B, exit A, exit B
+    keeps the pool at 1 while B is inside and restores it after B."""
+    pool = {"threads": 4}
+    fake = [(lambda: pool["threads"], lambda n: pool.update(threads=n))]
+    monkeypatch.setattr(S, "_blas_thread_controls", lambda: fake)
+    a, b = S._single_thread_blas(), S._single_thread_blas()
+    a.__enter__()
+    b.__enter__()
+    assert pool["threads"] == 1
+    a.__exit__(None, None, None)
+    assert pool["threads"] == 1  # B still needs the pin
+    b.__exit__(None, None, None)
+    assert pool["threads"] == 4
+
+
 def test_pq_train_bit_identical_under_thread_pinning():
     """pq_train (the ONLY pinned trainer) returns byte-equal codebooks
     with and without the pin, at the committed dsub=4 shape."""

@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from aircan_spark.rownum import with_row_number
+from aircan_spark.rownum import max_id, with_row_number
 
 
 def test_contiguous_from_one(spark):
@@ -11,6 +11,13 @@ def test_contiguous_from_one(spark):
     rows = out.orderBy("x").collect()
     assert [r["_id"] for r in rows] == list(range(1, 1001))
     assert out.columns[0] == "_id"
+
+
+def test_max_id_coalesces_to_zero(spark):
+    df = spark.createDataFrame([(3,), (7,), (None,)], "_id long")
+    assert max_id(df) == 7
+    assert max_id(df.filter("_id IS NULL")) == 0  # MAX over no values
+    assert max_id(df.withColumnRenamed("_id", "x")) == 0  # no such column
 
 
 def test_start_offset(spark):

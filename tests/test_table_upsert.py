@@ -170,9 +170,9 @@ def test_upsert_requires_keys(spark, tmp_path):
     t.overwrite(base_df(spark))
     stage = spark.createDataFrame([(1, "a")], ["sku", "name"])
     with pytest.raises(ValueError):
-        merge(t.read(), stage, [])
+        merge(t.read(), stage, [], insert_start=t.max_id() + 1)
     with pytest.raises(ValueError, match="absent"):
-        merge(t.read(), stage, ["no_such_key"])
+        merge(t.read(), stage, ["no_such_key"], insert_start=t.max_id() + 1)
 
 
 def test_backfill_updated_at(spark, tmp_path):
@@ -202,12 +202,13 @@ def test_merge_preserve_columns_insert_takes_stage_value(spark):
         [(10, "a2", "stage-note"), (20, "b", "new-note")],
         "sku int, name string, note string",
     )
-    out = {r["sku"]: r for r in merge(target, stage, ["sku"], preserve_columns=("note",)).collect()}
+    out = {r["sku"]: r for r in merge(target, stage, ["sku"], insert_start=2, preserve_columns=("note",)).collect()}
     assert out[10]["note"] == "keep-me"  # matched: preserved from target
     assert out[20]["note"] == "new-note"  # insert: stage value, not NULL
+    assert out[20]["_id"] == 2  # insert: numbered from insert_start
     # stage LACKS the preserved column -> insert gets NULL
     stage2 = spark.createDataFrame([(30, "c")], "sku int, name string")
-    out2 = {r["sku"]: r for r in merge(target, stage2, ["sku"], preserve_columns=("note",)).collect()}
+    out2 = {r["sku"]: r for r in merge(target, stage2, ["sku"], insert_start=2, preserve_columns=("note",)).collect()}
     assert out2[30]["note"] is None
     assert out2[10]["note"] == "keep-me"
 
